@@ -87,6 +87,12 @@ object ImageFunctions {
   private def x(c: Column): Expression = Bridge.expression(c)
   private def col(e: Expression): Column = Bridge.column(e)
 
+  /** Encode one tile: struct(payload, w, h, psnr). [[TileEncodeExpr]] is
+    * marked non-deterministic only as an optimizer barrier (the codec
+    * itself is pure). Use it only in Project/Filter, never in join
+    * conditions, grouping keys or sort keys: there the analyzer rejects or
+    * pulls out non-deterministic expressions.
+    */
   def tile_encode(bytes: Column, w: Column, h: Column, fmt: Column,
                   cell: Column): Column =
     col(TileEncodeExpr(x(bytes), x(w), x(h), x(fmt), x(cell)))

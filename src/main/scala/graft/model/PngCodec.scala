@@ -231,7 +231,11 @@ object PngCodec {
               else {
                 isFinal = (hdr & 1) == 1
                 val blen = (bytes(p + 1) & 0xFF) | ((bytes(p + 2) & 0xFF) << 8)
-                if (p + 5 + blen > end || off + blen > rawLen) ok = false
+                val nlen = (bytes(p + 3) & 0xFF) | ((bytes(p + 4) & 0xFF) << 8)
+                // NLEN must be LEN's one's complement (RFC 1951 §3.2.4); a
+                // mismatch falls back to the Inflater, which rejects it
+                if (nlen != (~blen & 0xFFFF) ||
+                    p + 5 + blen > end || off + blen > rawLen) ok = false
                 else {
                   System.arraycopy(bytes, p + 5, raw, off, blen)
                   off += blen

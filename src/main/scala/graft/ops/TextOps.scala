@@ -220,9 +220,11 @@ object TextOps {
     // the candidate pair set is checkpointed (reused three times); and
     // shingle sets are computed ONLY for documents that appear in some
     // candidate pair — the left_semi join keeps the shingle projection
-    // above it, so the corpus-wide text pass shrinks to the candidate set.
-    // One full text pass total. Results identical: same candidates, same
-    // exact-Jaccard verification.
+    // above it, so the shingle work shrinks to the candidate set. `sh` is
+    // not persisted: the doc_a and doc_b joins each scan it, so the
+    // documents source is read three times (MinHash pass + once per
+    // verify-join side) and candidate docs are shingled twice. Results
+    // identical: same candidates, same exact-Jaccard verification.
     val banded = minhashBandTable(documents, k, bands, rows).localCheckpoint()
     val a = banded.select(col("band_idx"), col("band_hash"), col("doc_id").as("doc_a"))
     val b = banded.select(col("band_idx"), col("band_hash"), col("doc_id").as("doc_b"))
@@ -439,10 +441,10 @@ object TextOps {
     * partitionings, and reruns (the q60/q61 seeded-hash discipline).
     *
     * Plan: one exchange on the stratum + a per-stratum window top-n. For
-    * few/hot strata at extreme scale, the same semantics drop into the
-    * bounded-buffer map-side Aggregator pattern (TopKCandAgg), which
-    * ships ≤ n rows per partition × stratum instead of the stratum's full
-    * rows; the window form is the general one.
+    * few/hot strata at extreme scale, a bounded-buffer map-side Aggregator
+    * (a size-n heap per stratum) would ship ≤ n rows per partition ×
+    * stratum instead of the stratum's full rows; the window form is the
+    * general one.
     */
   def stratifiedSample(df: DataFrame, strata: String, idCol: String,
                        n: Int, seed: Long): DataFrame = {
@@ -560,9 +562,10 @@ object TextOps {
     * a single driver row; idf values then ride into a per-row scoring
     * projection as literals (tf per term = codegen'd array filter over the
     * row's own tokens — no explode, no join). The only exchange after the
-    * stats pass is the top-k window, which the TopKCandAgg pattern bounds if
-    * k·strata ever matters. Float discipline: idf = round(log(ratio), 6)
-    * with the ratio built from exact integer-derived doubles, so the DuckDB
+    * stats pass is the top-k window, which a bounded-buffer map-side
+    * Aggregator could bound if k·strata ever matters. Float discipline:
+    * idf = round(log(ratio), 6) with the ratio built from exact
+    * integer-derived doubles, so the DuckDB
     * oracle replays every operation bit-for-bit (ln is the one transcendental
     * and it is rounded on both sides).
     */

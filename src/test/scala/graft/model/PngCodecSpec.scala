@@ -102,6 +102,17 @@ class PngCodecSpec extends AnyFunSuite {
     assert(decoded >= 0) // the loop completing IS the property (no hang)
   }
 
+  test("stored block with NLEN != ~LEN is rejected, not decoded") {
+    val enc = PngCodec.encode(ImageCodec.seededPixels(8, 8, 9L), 8, 8)
+    // IDAT data starts after SIG (8) + IHDR chunk (25) + IDAT length/type
+    // (8); the stored block header follows the 2-byte zlib header:
+    // BFINAL/BTYPE, LEN (2 bytes), NLEN (2 bytes)
+    val nlenAt = 8 + 25 + 8 + 2 + 3
+    val bad = enc.clone()
+    bad(nlenAt) = (bad(nlenAt) ^ 0x01).toByte
+    intercept[java.util.zip.DataFormatException](PngCodec.decode(bad))
+  }
+
   test("scratch decode agrees with fresh decode and survives interleaving") {
     // decodeScratch returns thread-local buffers that the tiling hot path
     // consumes before the next codec call — assert the documented contract:

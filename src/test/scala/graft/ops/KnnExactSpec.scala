@@ -11,8 +11,8 @@ import graft.model.Synth
 /** Adversarial exactness gate for the ring-expansion kNN (VERDICT round-1
   * "What's wrong #2"): a fixed 3×3 ring at 64 m cells guarantees only ~64 m
   * reach from an edge anchor, so probes whose true k-th neighbor lies past
-  * the ring must trigger expansion (or the brute-force tail) — never a
-  * silent wrong answer or a silent < k result.
+  * the ring must trigger expansion — never a silent wrong answer or a
+  * silent < k result.
   */
 class KnnExactSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -43,7 +43,7 @@ class KnnExactSpec extends AnyFunSuite {
   }
 
   // anchors chosen to break the fixed ring: exactly ON cell borders (64 m
-  // multiples), in the far empty corner (forces the brute-force tail), and
+  // multiples), in the far empty corner (forces late ladder rounds), and
   // barely outside a building block so the k-th neighbor crosses a cell edge
   private lazy val probes = Seq(
     ("p_cell_edge", 192.0, 128.0),
@@ -61,18 +61,14 @@ class KnnExactSpec extends AnyFunSuite {
       expect.exceptAll(exact).count() === 0)
   }
 
-  test("aggregator variant is identical on the adversarial anchors") {
-    val exact = SpatialOps.knnAssignAgg(probes, surfaces, k = 5)
-    val expect = brute(probes, surfaces, k = 5)
-    assert(exact.exceptAll(expect).count() === 0 &&
-      expect.exceptAll(exact).count() === 0)
-  }
-
   test("k exceeding the candidate pool returns every surface, ranked") {
     val one = Seq(("p", 130.0, 110.0)).toDF("image_id", "anchor_x", "anchor_y")
     val few = surfaces.where(col("building_id") === "bldg00000000")
     val res = SpatialOps.knnAssign(one, few, k = 100)
     assert(res.count() === few.count(), "must surface every candidate, not < k silently")
+    // no surfaces at all: every ladder round finds nothing, the whole-domain
+    // round leaves the probe unresolved, and the result is empty
+    assert(SpatialOps.knnAssign(one, surfaces.limit(0), k = 3).count() === 0)
   }
 
   // VERDICT round-2 "What's wrong #1": a probe cluster ~1,000 km from any
